@@ -14,7 +14,9 @@ from __future__ import annotations
 
 import numpy as np
 
-from mundipy_spark.kernels import constructive, measure, overlay, predicates, wkb
+from mundipy_spark.kernels import constructive, measure, overlay, predicates, proj, wkb
+
+_AREAL = ("Polygon", "MultiPolygon")
 
 
 def _as_geom(other):
@@ -370,10 +372,31 @@ class LocalIndex:
     Mundi.q injects for each named side dataset (the role the reference's
     fiona/PostGIS-indexed Dataset plays per probe, dataset.py:143-206).
 
-    Holds vectorized bbox arrays + parsed geometries; probes are numpy
-    over all rows (layers small enough to broadcast) with the reference's
+    Holds vectorized bbox arrays + parsed geometries with the reference's
     semantics: point probes buffered by 1e-3 deg (dataset.py:159),
     nearest returns None on empty (dataset.py:201-206).
+
+    Point probes against areal candidates (Polygon / MultiPolygon) run on
+    cached flat edge tables (`predicates.edge_table`), one numpy pass over
+    all candidates per probe instead of a per-candidate predicate call:
+
+    - lon/lat tables, built on first use per geometry, answer
+      `intersects`;
+    - projected tables, built per (geometry, UTM zone) pair the probes
+      hit, answer the meter distances of `within` and `nearest`. The
+      zone is still chosen per pair by `proj.local_projection` on the
+      union bbox of polygon and probe, and the tables come from the same
+      `proj.transform_geom` / `geom_segments` calls `measure.geom_distance_m`
+      makes, so distances are bit-identical to it.
+
+    Both keep `points_in_geom`'s rules: the 1e-9 on-edge tolerance and
+    even-odd parity per polygon part, ORed across the parts of a
+    MultiPolygon. Other pairs — non-Point probes, non-areal candidates,
+    and pairs whose local projection is an AEQD centred on the pair —
+    take the per-candidate `predicates.intersects` /
+    `measure.geom_distance_m` path. The caches are bounded by
+    geometries x zones touched, shared by `with_scale` views, and left
+    out of the pickle, so a broadcast never ships them.
     """
 
     def __init__(self, rows: list[tuple[bytes, dict]], uscale: float = 1.0):
@@ -387,6 +410,20 @@ class LocalIndex:
         self.minx, self.miny, self.maxx, self.maxy = b.T if len(b) else (
             np.empty(0), np.empty(0), np.empty(0), np.empty(0)
         )
+        self._init_caches()
+
+    def _init_caches(self) -> None:
+        self._tables: dict = {}  # geometry index -> lon/lat EdgeTable | None
+        self._zone_tables: dict = {}  # (geometry index, zone) -> EdgeTable | None
+
+    def __getstate__(self):
+        state = dict(self.__dict__)
+        del state["_tables"], state["_zone_tables"]
+        return state
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._init_caches()
 
     @classmethod
     def from_dataframe(cls, df, geom_col: str = "geometry"):
@@ -399,11 +436,10 @@ class LocalIndex:
         return cls(rows)
 
     def with_scale(self, uscale: float) -> "LocalIndex":
-        """Shallow view with a different session unit scale (arrays
-        shared) — Mundi(units=...) wraps side layers through this."""
-        import copy
-
-        ix = copy.copy(self)
+        """Shallow view with a different session unit scale (arrays and
+        caches shared) — Mundi(units=...) wraps side layers through this."""
+        ix = object.__new__(type(self))
+        ix.__dict__.update(self.__dict__)
         ix.uscale = uscale
         return ix
 
@@ -433,9 +469,76 @@ class LocalIndex:
             & (self.miny <= qmaxy)
         )[0]
 
+    def _feature(self, i) -> Feature:
+        return Feature(self.geoms[i], self.props[i], self.uscale)
+
     def inside_bbox(self, bbox) -> list[Feature]:
-        idx = self._bbox_candidates(*bbox)
-        return [Feature(self.geoms[i], self.props[i], self.uscale) for i in idx]
+        return [self._feature(i) for i in self._bbox_candidates(*bbox)]
+
+    def _table(self, i):
+        if i not in self._tables:
+            g = self.geoms[i]
+            self._tables[i] = predicates.edge_table(g) if g[0] in _AREAL else None
+        return self._tables[i]
+
+    def _zone_table(self, i, zone: str, fwd):
+        key = (i, zone)
+        if key not in self._zone_tables:
+            self._zone_tables[key] = predicates.edge_table(
+                proj.transform_geom(self.geoms[i], fwd)
+            )
+        return self._zone_tables[key]
+
+    def _point_hits(self, g, idx) -> tuple[np.ndarray, np.ndarray]:
+        """(hit, done) over candidates idx: `hit` is
+        `predicates.intersects(geom, g)` wherever `done` (a Point probe
+        vs areal candidates, answered from their lon/lat tables)."""
+        hit = np.zeros(len(idx), dtype=bool)
+        done = np.zeros(len(idx), dtype=bool)
+        if g[0] != "Point":
+            return hit, done
+        ks = [k for k, i in enumerate(idx) if self._table(i) is not None]
+        if ks:
+            covered, _ = predicates.point_vs_edge_tables(
+                g[1][0], g[1][1], [self._tables[idx[k]] for k in ks]
+            )
+            hit[ks], done[ks] = covered, True
+        return hit, done
+
+    def _point_distances_m(self, g, idx) -> tuple[np.ndarray, np.ndarray]:
+        """(dist, done) over candidates idx: `dist` is
+        `measure.geom_distance_m(geom, g)` wherever `done` (a Point probe
+        vs areal candidates whose local projection is a UTM zone,
+        answered from the zone's projected tables, one numpy pass per
+        zone)."""
+        dist = np.full(len(idx), np.inf)
+        done = np.zeros(len(idx), dtype=bool)
+        if g[0] != "Point":
+            return dist, done
+        px, py = float(g[1][0]), float(g[1][1])
+        zones: dict = {}
+        for k, i in enumerate(idx):
+            if self.geoms[i][0] not in _AREAL:
+                continue
+            zone, fwd, _ = proj.local_projection(
+                min(self.minx[i], px),
+                min(self.miny[i], py),
+                max(self.maxx[i], px),
+                max(self.maxy[i], py),
+                purpose="distance",
+            )
+            if zone.startswith("EPSG:"):  # an AEQD is centred on the pair
+                zones.setdefault(zone, (fwd, []))[1].append(k)
+        for zone, (fwd, ks) in zones.items():
+            ks = [k for k in ks if self._zone_table(idx[k], zone, fwd) is not None]
+            if not ks:
+                continue
+            pt = proj.transform_geom(g, fwd)[1]
+            covered, d = predicates.point_vs_edge_tables(
+                pt[0], pt[1], [self._zone_tables[(idx[k], zone)] for k in ks]
+            )
+            dist[ks], done[ks] = np.where(covered, 0.0, d), True
+        return dist, done
 
     def intersects(self, probe) -> list[Feature]:
         g = _as_geom(probe)
@@ -443,11 +546,10 @@ class LocalIndex:
         if g[0] == "Point":  # degenerate-bbox epsilon (dataset.py:159)
             minx, miny, maxx, maxy = minx - 1e-3, miny - 1e-3, maxx + 1e-3, maxy + 1e-3
         idx = self._bbox_candidates(minx, miny, maxx, maxy)
-        out = []
-        for i in idx:
-            if predicates.intersects(self.geoms[i], g):
-                out.append(Feature(self.geoms[i], self.props[i], self.uscale))
-        return out
+        hit, done = self._point_hits(g, idx)
+        for k in np.nonzero(~done)[0]:
+            hit[k] = predicates.intersects(self.geoms[idx[k]], g)
+        return [self._feature(i) for i in idx[hit]]
 
     def within(self, radius: float, probe) -> list[Feature]:
         """radius is in SESSION units (feet under Mundi(units='feet')) —
@@ -476,11 +578,10 @@ class LocalIndex:
         idx = self._bbox_candidates(
             minx - pad_lon, miny - pad_lat, maxx + pad_lon, maxy + pad_lat
         )
-        out = []
-        for i in idx:
-            if measure.geom_distance_m(self.geoms[i], g) <= radius_m:
-                out.append(Feature(self.geoms[i], self.props[i], self.uscale))
-        return out
+        dist, done = self._point_distances_m(g, idx)
+        for k in np.nonzero(~done)[0]:
+            dist[k] = measure.geom_distance_m(self.geoms[idx[k]], g)
+        return [self._feature(i) for i in idx[dist <= radius_m]]
 
     def nearest(self, probe) -> Feature | None:
         g = _as_geom(probe)
@@ -507,11 +608,21 @@ class LocalIndex:
         coslat = np.cos(np.radians(np.minimum(lat_hi, 89.99)))
         lb_m = np.maximum(dy * 110_000.0, dx * 70_000.0 * coslat)
         order = np.argsort(lb_m)
+        # Refine in lb order, stopping once the next bound exceeds the
+        # best distance. Point-vs-areal distances are taken a block of
+        # candidates at a time (doubling); the scan itself still visits
+        # one candidate at a time, so the pick (first strictly smallest
+        # distance in lb order) is the same as a one-by-one refine.
         best, best_d = None, np.inf
-        for i in order:
-            if lb_m[i] > best_d:
-                break
-            d = measure.geom_distance_m(self.geoms[int(i)], g)
-            if d < best_d:
-                best, best_d = int(i), d
-        return Feature(self.geoms[best], self.props[best], self.uscale) if best is not None else None
+        start, block = 0, 1
+        while start < len(order) and not lb_m[order[start]] > best_d:
+            blk = order[start : start + block]
+            dist, done = self._point_distances_m(g, blk)
+            for k, i in enumerate(blk):
+                if lb_m[i] > best_d:
+                    return self._feature(best)
+                d = dist[k] if done[k] else measure.geom_distance_m(self.geoms[int(i)], g)
+                if d < best_d:
+                    best, best_d = int(i), d
+            start, block = start + block, block * 2
+        return self._feature(best) if best is not None else None

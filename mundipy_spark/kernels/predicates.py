@@ -18,6 +18,8 @@ the reference's lazy `make_valid` repair-on-GEOSException path
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 from mundipy_spark.kernels import wkb
@@ -223,6 +225,108 @@ def points_in_geom(xs, ys, geom, boundary: bool = True, eps: float = 1e-9) -> np
         else:
             inside &= ~on_edge
     return inside
+
+
+class EdgeTable(NamedTuple):
+    """What `points_in_geom` and `point_segs_min_dist` derive from a
+    (Multi)Polygon on every call, built once by `edge_table`. Arrays are
+    column-major so each operand is a contiguous row."""
+
+    cross: np.ndarray  # (5, e) x1, y1, y2, x2 - x1, y2 - y1 of the parity edges
+    part: np.ndarray  # (e,) polygon part of each parity edge
+    nparts: int
+    segs: np.ndarray  # (5, s) x1, y1, dx, dy, squared length (0 -> 1) of the boundary
+    bounds: tuple[float, float, float, float]
+
+
+def edge_table(geom) -> EdgeTable | None:
+    """Flat point-probe table of a Polygon / MultiPolygon.
+
+    The parity edges are those `crossings_in_ring` walks: every ring of
+    >= 3 vertices, wrap edge included, horizontal edges dropped (they
+    never flip parity). Each carries its part id because parity is per
+    part and the parts OR — `points_in_geom`'s rule, which differs from
+    `points_in_polys_flat`'s global parity where parts overlap. The
+    boundary segments are `geom_segments`'. Returns None for a geometry
+    with no boundary segment."""
+    segs = geom_segments(geom)
+    if not len(segs):
+        return None
+    cross, part = [], []
+    nparts = 0
+    for rings in _polygons_of(geom):
+        for ring in rings:
+            r = np.asarray(ring, dtype=np.float64)
+            if len(r) < 3:
+                continue
+            x1, y1 = r[:, 0], r[:, 1]
+            x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
+            keep = y1 != y2
+            cross.append(np.stack([x1, y1, y2, x2 - x1, y2 - y1])[:, keep])
+            part.append(np.full(int(keep.sum()), nparts, dtype=np.int64))
+        nparts += 1
+    sx1, sy1 = segs[:, 0], segs[:, 1]
+    dx, dy = segs[:, 2] - sx1, segs[:, 3] - sy1
+    ln2 = dx * dx + dy * dy
+    return EdgeTable(
+        np.concatenate(cross, axis=1) if cross else np.empty((5, 0), dtype=np.float64),
+        np.concatenate(part) if part else np.empty(0, dtype=np.int64),
+        nparts,
+        np.stack([sx1, sy1, dx, dy, np.where(ln2 == 0, 1.0, ln2)]),
+        wkb.bounds(geom),
+    )
+
+
+def point_vs_edge_tables(
+    px: float, py: float, tables: list[EdgeTable], eps: float = 1e-9
+) -> tuple[np.ndarray, np.ndarray]:
+    """One point against many edge tables in one numpy pass.
+
+    Returns (covered, dist) aligned with `tables`. `covered` is
+    `intersects(geom, point)`: the eps-padded bbox gate of
+    `bbox_disjoint`, then `points_in_geom` (per-part even-odd parity, or
+    within eps of the boundary). `dist` is `geom_distance_planar`: 0
+    where covered, else the distance to the nearest boundary segment.
+    The arithmetic is that of `crossings_in_ring` and
+    `point_segs_min_dist`, so the values are bit-identical to theirs."""
+    n = len(tables)
+    if n == 1:
+        cross, part, segs = tables[0].cross, tables[0].part, tables[0].segs
+    else:
+        cross = np.concatenate([t.cross for t in tables], axis=1)
+        segs = np.concatenate([t.segs for t in tables], axis=1)
+    gate = np.asarray(
+        [
+            not (maxx < px - eps or px < minx - eps or maxy < py - eps or py < miny - eps)
+            for minx, miny, maxx, maxy in (t.bounds for t in tables)
+        ]
+    )
+    inside = np.zeros(n, dtype=bool)
+    if gate.any():
+        x1, y1, y2, dxe, dye = cross
+        flip = ((y1 > py) != (y2 > py)) & (px < dxe * (py - y1) / dye + x1)
+        if n == 1 and tables[0].nparts == 1:
+            inside[0] = np.count_nonzero(flip) % 2 == 1
+        else:
+            nparts = [t.nparts for t in tables]
+            if n > 1:
+                base = np.cumsum(nparts) - nparts
+                part = np.concatenate([t.part for t in tables]) + np.repeat(
+                    base, [t.cross.shape[1] for t in tables]
+                )
+            odd = np.bincount(part[flip], minlength=sum(nparts)) % 2 == 1
+            inside = np.bincount(np.repeat(np.arange(n), nparts)[odd], minlength=n) > 0
+        inside &= gate
+        if inside.all():
+            return inside, np.zeros(n)
+    sx1, sy1, dx, dy, ln2 = segs
+    # maximum/minimum is np.clip's arithmetic without its dispatch cost
+    f = np.minimum(np.maximum(((px - sx1) * dx + (py - sy1) * dy) / ln2, 0.0), 1.0)
+    d2 = (px - (sx1 + f * dx)) ** 2 + (py - (sy1 + f * dy)) ** 2
+    starts = np.cumsum([0] + [t.segs.shape[1] for t in tables[:-1]])
+    dist = np.sqrt(np.minimum.reduceat(d2, starts))
+    covered = inside | (gate & (dist <= eps))
+    return covered, np.where(covered, 0.0, dist)
 
 
 def points_in_polys_flat(

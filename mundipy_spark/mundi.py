@@ -5,8 +5,16 @@ injecting side layers by PARAMETER NAME (the reference's reflection
 trick, mundi.py:35-50) as broadcast LocalIndex objects. Execution is
 mapInPandas over the main DataFrame: Arrow batches in, the user's
 Python per row (that is the reference's contract — U1 is the one
-deliberately row-wise operator), Arrow batches out. The heavy spatial
-probing inside the user fn hits vectorized LocalIndex kernels.
+deliberately row-wise operator), Arrow batches out.
+
+The spatial probing inside the user fn runs on the LocalIndex of each
+side layer. A point probe against polygons is one numpy pass over flat
+edge tables of its candidates: lon/lat tables for `intersects`, and
+projected tables per (polygon, UTM zone) pair for the meter distances
+of `within` / `nearest`. Each worker builds those tables lazily on first
+use and keeps them with its broadcast copy; they are never pickled. The
+tables keep the even-odd rule of `predicates.points_in_geom`: parity per
+polygon part, ORed across the parts of a MultiPolygon.
 
 Contract parity (judge-visible semantics, SURVEY §7.4):
 - fn returning None drops the row (mundi.py:138-140);
@@ -189,30 +197,29 @@ class Mundi:
             first = main_df.orderBy("_id").limit(256).collect()
             if not first:
                 raise ValueError("main layer is empty")
-            proto_out = None
-            probe_results = []
+            # key NAMES are fixed by the first result (reference rule);
+            # each key's TYPE comes from its first NON-null value across
+            # the probe window — a null first value (common in
+            # passthrough GeoJSON properties) must not mis-type a later
+            # numeric. The probe stops once every key is typed; keys
+            # still all-null at the window's end fall back to string,
+            # matching how a null-only column reads anyway.
+            key_fields, key_types = None, {}
             for row in first:
                 ret = _call_one(fn, row, geom_col, bc_layers, uscale)
-                if ret is not None:
-                    probe_results.append(ret)
-                    if proto_out is None:
-                        proto_out = ret
-            if proto_out is not None:
-                # key NAMES are fixed by the first result (reference
-                # rule); each key's TYPE comes from its first NON-null
-                # value across the probe window — a null first value
-                # (common in passthrough GeoJSON properties) must not
-                # mis-type a later numeric. All-null keys fall back to
-                # string, matching how a null-only column reads anyway.
-                key_fields = list(proto_out.features.keys())
-                key_types = {}
+                if ret is None:
+                    continue
+                if key_fields is None:
+                    key_fields = list(ret.features.keys())
                 for k in key_fields:
-                    t = None
-                    for ret in probe_results:
+                    if k not in key_types:
                         t = _sql_type(ret.features.get(k))
                         if t is not None:
-                            break
-                    key_types[k] = t or "string"
+                            key_types[k] = t
+                if len(key_types) == len(key_fields):
+                    break
+            if key_fields is not None:
+                key_types = {k: key_types.get(k, "string") for k in key_fields}
             elif len(first) == 256:
                 key_fields, key_types = _distributed_keyset_probe(
                     main_df.filter(F.col("_id") > first[-1]["_id"]),
@@ -232,7 +239,7 @@ class Mundi:
                 if progress_acc is not None:
                     progress_acc.add(len(pdf))
                 out_rows = []
-                for _, row in pdf.iterrows():
+                for row in _rows(pdf):
                     feat = _row_to_feature(row, geom_col, uscale)
                     buf = io.StringIO()
                     with contextlib.redirect_stdout(buf):
@@ -394,7 +401,7 @@ def _distributed_keyset_probe(df, fn, geom_col, bc_layers, layer_names, uscale):
 
     def probe(batches):
         for pdf in batches:
-            for _, row in pdf.iterrows():
+            for row in _rows(pdf):
                 feat = _row_to_feature(row, geom_col, uscale)
                 with contextlib.redirect_stdout(io.StringIO()):
                     ret = fn(feat, *[bc_layers[n].value for n in layer_names])
@@ -423,7 +430,15 @@ def _distributed_keyset_probe(df, fn, geom_col, bc_layers, layer_names, uscale):
     return [k for k, _ in spec], dict(spec)
 
 
-def _row_to_feature(row: pd.Series, geom_col: str, uscale: float = 1.0) -> Feature:
+def _rows(pdf: pd.DataFrame):
+    """The batch's rows as {column: value} dicts, built from per-column
+    lists — the values `iterrows` gives, without a pandas Series per row."""
+    cols = list(pdf.columns)
+    for vals in zip(*(pdf.iloc[:, j].tolist() for j in range(len(cols)))):
+        yield dict(zip(cols, vals))
+
+
+def _row_to_feature(row: dict, geom_col: str, uscale: float = 1.0) -> Feature:
     d = {k: v for k, v in row.items() if k not in (geom_col, "_id")}
     return Feature(bytes(row[geom_col]), d, uscale)
 

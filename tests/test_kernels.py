@@ -617,6 +617,36 @@ def test_local_index_within_high_latitude_lon_pad():
     assert len(ix.within(300.0, probe)) == 0  # exact refine still prunes
 
 
+def test_local_index_caches_lazy_shared_and_not_pickled():
+    """The edge-table caches fill on first probe, are shared by
+    with_scale views, and stay out of the pickle: the broadcast payload
+    of a probed index equals that of a fresh one."""
+    import pickle
+
+    from mundipy_spark.feature import LocalIndex
+    from mundipy_spark.kernels import wkb as wkb_mod
+
+    square = np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0], [0.0, 1.0], [0.0, 0.0]])
+    rows = [
+        (wkb_mod.dumps(("Polygon", [square + [dx, 0.0]])), {"n": k})
+        for k, dx in enumerate((2.5, 3.5, 6.5))  # 6.5-7.5 is the next UTM zone
+    ]
+    ix = LocalIndex(rows)
+    payload = pickle.dumps(ix)
+    assert not ix._tables and not ix._zone_tables
+    view = ix.with_scale(3.28084)
+    probe = ("Point", np.array([5.9, 0.5]))
+    assert [f["n"] for f in view.within(300_000 * 3.28084, probe)] == [0, 1, 2]
+    assert [f["n"] for f in view.intersects(("Point", np.array([3.5, 0.5])))] == [0, 1]
+    assert set(ix._tables) == {0, 1}
+    assert set(ix._zone_tables) == {(0, "EPSG:32631"), (1, "EPSG:32631"), (2, "EPSG:32632")}
+    assert view.nearest(probe)["n"] == 2
+    assert pickle.dumps(ix) == payload
+    back = pickle.loads(payload)
+    assert not back._tables and not back._zone_tables
+    assert back.nearest(probe)["n"] == 2
+
+
 def test_projected_codes_property_roundtrip():
     """Property: every transformable PROJECTED_CODES entry round-trips
     random in-area points to <1e-6 deg (~10 cm) through forward+inverse,

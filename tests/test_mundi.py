@@ -454,6 +454,33 @@ def test_keyset_first_result_beyond_256_rows(spark):
     assert min(f["properties"]["deep"] for f in feats) == 301
 
 
+def test_driver_key_probe_stops_once_every_key_is_typed(spark):
+    """The driver-side key-type probe calls fn only until every key of
+    the first result has a non-null value: here rows 0 (score null) and
+    1 (score 1.5). The executors run fn in Python workers, so `calls`
+    in this process records the driver probe alone."""
+    import numpy as np
+
+    from mundipy_spark.dataset import Dataset, Map
+    from mundipy_spark.kernels import wkb as wkb_mod
+    from mundipy_spark.mundi import Mundi
+
+    rows = [(wkb_mod.dumps(("Point", np.array([float(i), 0.0]))), i) for i in range(40)]
+    df = spark.createDataFrame(rows, "geometry binary, i long")
+    m = Map({"pts": Dataset(df)}, spark=spark)
+    calls = []
+
+    def proc(p):
+        calls.append(p["i"])
+        p["score"] = None if p["i"] == 0 else 1.5
+        return p
+
+    feats = Mundi(m, "pts").q(proc)["features"]
+    assert calls == [0, 1]
+    assert len(feats) == 40
+    assert {f["properties"]["score"] for f in feats if f["properties"]["i"]} == {1.5}
+
+
 def test_mundi_q_single_scan(spark, tmp_path):
     """q_df must read the main-layer source exactly ONCE: the ordinal-
     stamped frame is cached, so the executed plan of the returned frame

@@ -183,3 +183,122 @@ def test_nearest_exact_at_high_latitude(lats, lons, plat, plon):
     assert got is not None
     # accept exact argmin or an equidistant twin (float ties)
     assert abs(dists[got["i"]] - dists[best]) <= 1e-6 * max(dists[best], 1.0)
+
+
+# --- LocalIndex point probes vs the per-candidate loop ------------------------
+
+
+def _ref_candidates(ix, minx, miny, maxx, maxy):
+    return np.nonzero(
+        (ix.maxx >= minx) & (ix.minx <= maxx) & (ix.maxy >= miny) & (ix.miny <= maxy)
+    )[0]
+
+
+def _ref_intersects(ix, g):
+    """LocalIndex.intersects as a per-candidate predicate loop."""
+    minx, miny, maxx, maxy = wkb.bounds(g)
+    if g[0] == "Point":
+        minx, miny, maxx, maxy = minx - 1e-3, miny - 1e-3, maxx + 1e-3, maxy + 1e-3
+    idx = _ref_candidates(ix, minx, miny, maxx, maxy)
+    return [int(i) for i in idx if predicates.intersects(ix.geoms[i], g)]
+
+
+def _ref_within(ix, radius_m, g):
+    """LocalIndex.within (uscale 1) as a per-candidate distance loop."""
+    minx, miny, maxx, maxy = wkb.bounds(g)
+    pad_lat = radius_m / 110_000.0 + 1e-9
+    lat_hi = min(max(abs(miny), abs(maxy)) + pad_lat, 89.9)
+    coslat = max(np.cos(np.radians(lat_hi)), 1e-6)
+    pad_lon = radius_m / (110_000.0 * coslat) + 1e-9
+    idx = _ref_candidates(ix, minx - pad_lon, miny - pad_lat, maxx + pad_lon, maxy + pad_lat)
+    return [int(i) for i in idx if measure.geom_distance_m(ix.geoms[i], g) <= radius_m]
+
+
+def _ref_nearest(ix, g):
+    """LocalIndex.nearest as a best-first loop: candidates in
+    argsort(lb_m) order, stop once the bound exceeds the best distance,
+    replace the best only on a strictly smaller distance."""
+    pminx, pminy, pmaxx, pmaxy = wkb.bounds(g)
+    dx = np.maximum(np.maximum(ix.minx - pmaxx, pminx - ix.maxx), 0.0)
+    hull = np.maximum(ix.maxx, pmaxx) - np.minimum(ix.minx, pminx)
+    dx = np.minimum(dx, np.maximum(360.0 - hull, 0.0))
+    dy = np.maximum(np.maximum(ix.miny - pmaxy, pminy - ix.maxy), 0.0)
+    lat_hi = np.maximum(
+        np.maximum(np.abs(ix.miny), np.abs(ix.maxy)), max(abs(pminy), abs(pmaxy))
+    )
+    coslat = np.cos(np.radians(np.minimum(lat_hi, 89.99)))
+    lb_m = np.maximum(dy * 110_000.0, dx * 70_000.0 * coslat)
+    best, best_d = None, np.inf
+    for i in np.argsort(lb_m):
+        if lb_m[i] > best_d:
+            break
+        d = measure.geom_distance_m(ix.geoms[int(i)], g)
+        if d < best_d:
+            best, best_d = int(i), d
+    return best
+
+
+def _star_ring(rng, cx, cy, r, n):
+    """Closed ring with jittered, evenly spread angles: contains the
+    disc of radius 0.5 * r about (cx, cy)."""
+    th = 2 * np.pi * (np.arange(n) + rng.uniform(0.1, 0.9, n)) / n
+    rad = r * (0.75 + 0.25 * rng.random(n))
+    ring = np.c_[cx + rad * np.cos(th), cy + rad * np.sin(th)]
+    return np.vstack([ring, ring[:1]])
+
+
+def _rect(x0, y0, x1, y1):
+    return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]])
+
+
+@given(
+    zone=st.integers(1, 59),
+    lat0=st.floats(-60.0, 60.0),
+    seed=st.integers(0, 2**32 - 1),
+    radius_m=st.floats(0.0, 80_000.0),
+)
+@settings(max_examples=25, deadline=None)
+def test_local_index_point_probes_match_per_candidate_loop(zone, lat0, seed, radius_m):
+    """LocalIndex's edge-table point probes return the same features in
+    the same order, and the same nearest pick on ties, as the
+    per-candidate predicate / distance loop. The layer has a holed
+    polygon, a MultiPolygon with overlapping parts (per-part parity ORs,
+    so the overlap is inside), polygons on both sides of a UTM zone
+    boundary, a polygon wider than 6 deg of longitude (AEQD pairs), and
+    a point feature; the wide polygon overlaps two others, so nearest
+    meets ties at distance 0. Probes include vertices and edge
+    midpoints."""
+    from mundipy_spark.feature import LocalIndex
+
+    rng = np.random.default_rng(seed)
+    b = -180.0 + 6.0 * zone  # UTM zone boundary
+    geoms = [
+        ("Polygon", [_star_ring(rng, b - 0.9, lat0, 0.7, 12),
+                     _rect(b - 1.1, lat0 - 0.2, b - 0.7, lat0 + 0.2)[::-1]]),
+        ("Polygon", [_star_ring(rng, b + 0.8, lat0 + 0.3, 0.6, 10)]),
+        ("MultiPolygon", [[_rect(b - 0.4, lat0 - 1.6, b + 0.2, lat0 - 1.0)],
+                          [_rect(b - 0.1, lat0 - 1.3, b + 0.5, lat0 - 0.7)]]),
+        ("Polygon", [_rect(b - 4.5, lat0 + 0.6, b + 4.0, lat0 + 1.0)]),
+        ("Point", np.array([b + 0.2, lat0 - 0.9])),
+    ]
+    ix = LocalIndex([(wkb.dumps(g), {"i": i}) for i, g in enumerate(geoms)])
+
+    verts = np.concatenate([predicates.geom_vertices(g) for g in geoms[:4]])
+    segs = np.concatenate([predicates.geom_segments(g) for g in geoms[:4]])
+    mids = (segs[:, :2] + segs[:, 2:]) / 2.0
+    rand = np.c_[rng.uniform(b - 5.0, b + 5.0, 8), rng.uniform(lat0 - 2.5, lat0 + 2.0, 8)]
+    probes = np.concatenate(
+        [verts[rng.choice(len(verts), 10)], mids[rng.choice(len(mids), 10)], rand,
+         [[b - 0.05, lat0 - 1.05], [b + 0.001, lat0 + 0.3], [b + 0.8, lat0 + 0.65]]]
+    )
+    for x, y in probes:
+        g = ("Point", np.array([x, y]))
+        assert [f["i"] for f in ix.intersects(g)] == _ref_intersects(ix, g)
+        assert [f["i"] for f in ix.within(radius_m, g)] == _ref_within(ix, radius_m, g)
+        near = ix.nearest(g)
+        assert (near["i"] if near is not None else None) == _ref_nearest(ix, g)
+    # the overlap of the MultiPolygon's parts: even parity globally,
+    # inside under the per-part rule
+    assert 2 in [f["i"] for f in ix.intersects(("Point", np.array([b - 0.05, lat0 - 1.05])))]
+    # probes near the boundary measured polygons in both zones
+    assert len({z[-2:] for _, z in ix._zone_tables}) == 2
