@@ -389,9 +389,9 @@ class LocalIndex:
       `proj.transform_geom` / `geom_segments` calls `measure.geom_distance_m`
       makes, so distances are bit-identical to it.
 
-    Both keep `points_in_geom`'s rules: the 1e-9 on-edge tolerance and
-    even-odd parity per polygon part, ORed across the parts of a
-    MultiPolygon. Other pairs — non-Point probes, non-areal candidates,
+    Both follow the PIP rule of `kernels.predicates`: one even-odd
+    parity over all ring edges of the geometry, or within 1e-9 of its
+    boundary. Other pairs — non-Point probes, non-areal candidates,
     and pairs whose local projection is an AEQD centred on the pair —
     take the per-candidate `predicates.intersects` /
     `measure.geom_distance_m` path. The caches are bounded by

@@ -485,12 +485,13 @@ def st_cell_refine(g: pd.Series, cell: pd.Series) -> pd.DataFrame:
     the broadcast ships a handful of doubles per boundary cell instead
     of whole-polygon WKB. Distinct geometries decode once per batch.
 
-    Invalid overlapping-interior multipolygons (where the refine path's
-    XOR parity diverges from OR-across-polygons — see
-    `tiling.multiparts_interiors_overlap`) emit an nring=-1 sentinel
-    instead of refine data; the index probe in `operators.joins` reads
-    it and falls back to the Arrow path, so the fast path can never
-    silently return wrong containment for such layers."""
+    The refine data answers the PIP rule of `kernels.predicates` with
+    one parity over all ring edges. A GeometryCollection with two or
+    more areal members (`predicates.members_or`) ORs its members, which
+    one parity cannot express: it emits an nring=-1 sentinel instead of
+    refine data; the index probe in `operators.joins` reads it and falls
+    back to the Arrow path, so the fast path never silently returns
+    wrong containment for such layers."""
     out_n = np.zeros(len(g), dtype=np.int64)
     out_b = np.zeros(len(g), dtype=bool)
     out_s: list = [None] * len(g)
@@ -501,7 +502,7 @@ def st_cell_refine(g: pd.Series, cell: pd.Series) -> pd.DataFrame:
     cells = cell.to_numpy(np.int64)
     for key, idx in groups.items():
         geom = wkb.loads(key)
-        if tiling.multiparts_interiors_overlap(geom):
+        if predicates.members_or(geom):
             for i in idx:
                 out_n[i] = -1
                 out_s[i] = []
@@ -516,15 +517,47 @@ def st_cell_refine(g: pd.Series, cell: pd.Series) -> pd.DataFrame:
     )
 
 
+def _seg_terms(lon: Column, lat: Column, xi, yi, xj, yj) -> tuple[Column, Column]:
+    """(crossed, d2) of one refine segment: whether the point's +x ray
+    crosses it (`predicates._crossings`' formula; yi==yj edges die on
+    the (yi>lat)!=(yj>lat) term, so the division never matters where it
+    is undefined) and the squared distance from the point to it.
+
+    d2 is the squared distance to the nearer endpoint when the
+    projection falls outside the segment, else cross^2 / ln2. Both are
+    well conditioned: a point on the segment gets d2 ~ 1e-32 * |u|^2.
+    The expanded form |u|^2 - t * (2 * dot - t * ln2) cancels there
+    (error ~1e-16 * |u|^2, far above the 1e-18 bound, so on-edge points
+    of slanted edges were missed), and the kernel's clipped-projection
+    form repeats the clip subtree at every Column reference (Column
+    reuse in Python duplicates the whole subtree; the join-condition
+    method it generated was too big to JIT, 22s vs 7s at 30M pages).
+    Null lookups past the array end make both terms null."""
+    dx, dy = xj - xi, yj - yi
+    ux, uy = lon - xi, lat - yi
+    vx, vy = lon - xj, lat - yj
+    dot = ux * dx + uy * dy
+    ln2 = dx * dx + dy * dy
+    cr = ux * dy - uy * dx
+    crossed = ((yi > lat) != (yj > lat)) & (lon < dx * (lat - yi) / dy + xi)
+    d2 = (
+        F.when(dot <= 0.0, ux * ux + uy * uy)
+        .when(dot >= ln2, vx * vx + vy * vy)
+        .otherwise(cr * cr / ln2)
+    )
+    return crossed, d2
+
+
 def pip_refine_expr(
     lon: Column, lat: Column, segs: Column, nring: Column, bpar: Column,
     maxk: int,
 ) -> Column:
     """Exact point-in-geometry refinement as a pure Catalyst expression
     over the per-cell segment subset from `st_cell_refine` — the JVM
-    twin of the `st_point_in_geom` Arrow kernel (identical crossing and
-    min-distance arithmetic, in the same operand order, so the doubles
-    round identically).
+    twin of the `st_point_in_geom` Arrow kernel under the PIP rule of
+    `kernels.predicates` (the same crossing arithmetic, in the same
+    operand order, so the doubles round identically; the 1e-9 on-edge
+    test in the form of `_seg_terms`).
 
     The per-segment loop is UNROLLED to the layer's max segments-per-
     boundary-cell (`maxk`, a tiny driver-side agg over the index):
@@ -542,37 +575,10 @@ def pip_refine_expr(
     par = F.lit(False)
     edge = F.lit(False)
     for i in range(maxk):
-        xi, yi = F.get(segs, i * 4), F.get(segs, i * 4 + 1)
-        xj, yj = F.get(segs, i * 4 + 2), F.get(segs, i * 4 + 3)
-        # crossing parity: same formula as predicates.crossings_in_ring
-        # (yi==yj edges die on the (yi>lat)!=(yj>lat) term, so the
-        # division never matters where it is undefined; past-the-end
-        # lookups are null and the conjunction collapses to false)
-        xint = (xj - xi) * (lat - yi) / (yj - yi) + xi
-        cross = (
-            (F.lit(i) < nring)
-            & ((yi > lat) != (yj > lat))
-            & (lon < xint)
+        crossed, d2 = _seg_terms(
+            lon, lat, *(F.get(segs, i * 4 + j) for j in range(4))
         )
-        # on-edge epsilon test. Algebraically identical to
-        # point_segs_min_dist's clipped-projection distance, rewritten
-        # closed-form (d2 = |u|^2 - t*(2*dot - t*ln2), t = clip(dot/ln2))
-        # and compared squared: Column reuse in Python duplicates the
-        # whole subtree at every reference, and the naive qx/qy form
-        # repeats the clip subtree ~8x per segment — the join-condition
-        # method it generated was too big to JIT (22s vs 7s at 30M
-        # pages). FP rounding differs from the kernel only in the last
-        # ulps, decisive for any point not engineered to sit exactly at
-        # the 1e-9 boundary (real inputs are either ON an edge, d2~1e-30,
-        # or >=1e-3 away).
-        dx, dy = xj - xi, yj - yi
-        ux, uy = lon - xi, lat - yi
-        ln2 = dx * dx + dy * dy
-        u2 = ux * ux + uy * uy
-        dot = ux * dx + uy * dy
-        t = F.least(F.greatest(dot / ln2, F.lit(0.0)), F.lit(1.0))
-        d2 = F.when(ln2 == 0.0, u2).otherwise(u2 - t * (dot + dot - t * ln2))
-        par = par != F.coalesce(cross, F.lit(False))
+        par = par != F.coalesce((F.lit(i) < nring) & crossed, F.lit(False))
         edge = edge | F.coalesce(d2 <= F.lit(1e-18), F.lit(False))
     base = F.coalesce(bpar, F.lit(False))
     # the edge chain only matters when parity says OUTSIDE (it can only
@@ -598,23 +604,13 @@ def pip_refine_agg_expr(
     served by refine="arrow" (per-batch numpy)."""
     k = (F.size(segs) / F.lit(4)).cast("int")
 
-    def sg(i: Column, j: int) -> Column:
-        return F.element_at(segs, ((i - 1) * 4 + F.lit(j + 1)).cast("int"))
-
     def merge(acc: Column, i: Column) -> Column:
-        xi, yi = sg(i, 0), sg(i, 1)
-        xj, yj = sg(i, 2), sg(i, 3)
-        xint = (xj - xi) * (lat - yi) / (yj - yi) + xi
-        cross = (i <= nring) & ((yi > lat) != (yj > lat)) & (lon < xint)
-        dx, dy = xj - xi, yj - yi
-        ux, uy = lon - xi, lat - yi
-        ln2 = dx * dx + dy * dy
-        u2 = ux * ux + uy * uy
-        dot = ux * dx + uy * dy
-        t = F.least(F.greatest(dot / ln2, F.lit(0.0)), F.lit(1.0))
-        d2 = F.when(ln2 == 0.0, u2).otherwise(u2 - t * (dot + dot - t * ln2))
+        crossed, d2 = _seg_terms(
+            lon, lat,
+            *(F.element_at(segs, ((i - 1) * 4 + F.lit(j + 1)).cast("int")) for j in range(4)),
+        )
         return F.struct(
-            (acc["p"] != F.coalesce(cross, F.lit(False))).alias("p"),
+            (acc["p"] != F.coalesce((i <= nring) & crossed, F.lit(False))).alias("p"),
             (acc["e"] | F.coalesce(d2 <= F.lit(1e-18), F.lit(False))).alias("e"),
         )
 
@@ -649,19 +645,17 @@ _PIP_DECODE_CACHE: dict[bytes, tuple] = {}
 
 
 def _decode_for_pip(key: bytes):
+    """(segs, has_area, flat_ok, geom) of a WKB blob, memoized across
+    batches. flat_ok marks a Polygon / MultiPolygon: its `segs` are
+    exactly the ring edges `points_in_polys_flat` takes one parity over
+    (the PIP rule of `kernels.predicates`). Anything else (lines,
+    points, collections, whose members OR) takes `points_in_geom`."""
     ent = _PIP_DECODE_CACHE.get(key)
     if ent is None:
         geom = wkb.loads(key)
         segs = predicates.geom_segments(geom)
-        # flat_ok: the flat path XORs crossings across ALL rings of the
-        # geometry, which equals points_in_geom's OR-across-polygons
-        # only when member interiors are disjoint (any valid
-        # (Multi)Polygon). An invalid overlapping-interior multi routes
-        # to the generic per-polygon slow path instead (exact check,
-        # decode-time only, memoized with the decode).
-        has_area = predicates.has_area(geom)
-        flat_ok = has_area and not tiling.multiparts_interiors_overlap(geom)
-        ent = (segs, has_area, flat_ok, geom)
+        flat_ok = geom[0] in ("Polygon", "MultiPolygon")
+        ent = (segs, predicates.has_area(geom), flat_ok, geom)
         if len(_PIP_DECODE_CACHE) >= _POINT_INTERSECTS_CACHE_LIMIT:
             _PIP_DECODE_CACHE.clear()
         _PIP_DECODE_CACHE[key] = ent
@@ -689,7 +683,7 @@ def _pip_flat(xs: np.ndarray, ys: np.ndarray, geoms) -> tuple[np.ndarray, np.nda
         ii = np.asarray(idx, dtype=np.int64)
         if flat_ok and len(segs):
             flat_groups.append((ii, segs))
-        else:  # degenerate/non-area or overlapping-interior: slow path
+        else:  # empty, non-area or a collection: generic path
             hit_all[ii] = predicates.points_in_geom(xs[ii], ys[ii], geom)
     if flat_groups:
         hit_all |= predicates.points_in_polys_flat(xs, ys, flat_groups)

@@ -10,10 +10,28 @@ Vectorization contract: the hot call is *many points vs one polygon*
 zero per-point Python. Pairwise geometry-vs-geometry predicates loop per
 pair but vectorize over vertices/edges inside the pair.
 
-Point-in-polygon uses the even-odd crossing rule, which is tolerant of
-invalid (self-intersecting) rings by construction — this stands in for
-the reference's lazy `make_valid` repair-on-GEOSException path
-(mundipy/geometry.py:296-320).
+Point-in-polygon rule. Every PIP path implements this one rule:
+`points_in_geom`, LocalIndex's `edge_table` / `point_vs_edge_tables`,
+the tile joins' Arrow refine (`points_in_polys_flat`) and their JVM
+refine (`tiling.cell_refine_segments` + `functions.st.pip_refine_expr`).
+
+- Polygon / MultiPolygon: a point is inside when its +x ray crosses an
+  odd number of the geometry's ring edges, counting every ring of every
+  part together, or when it lies within 1e-9 of the boundary. Holes,
+  self-crossing rings and overlapping parts all follow from that one
+  parity: where two parts overlap, the point is outside.
+- GeometryCollection: covers a point when any member does (collection
+  members may validly overlap).
+- Ring edges come from `_ring_segments`: consecutive vertices plus the
+  closing edge, which is dropped only when the first and last vertex
+  are exactly equal. Edge (x1, y1)-(x2, y2) is crossed by the ray from
+  (x, y) when (y1 > y) != (y2 > y) and
+  x < (x2 - x1) * (y - y1) / (y2 - y1) + x1, the same arithmetic on
+  every path.
+
+Even-odd parity is tolerant of invalid (self-intersecting) rings by
+construction — this stands in for the reference's lazy `make_valid`
+repair-on-GEOSException path (mundipy/geometry.py:296-320).
 """
 
 from __future__ import annotations
@@ -41,14 +59,16 @@ def geom_vertices(geom) -> np.ndarray:
 
 
 def _ring_segments(ring: np.ndarray) -> np.ndarray:
-    """Closed-ring edges as (m, 4) [x1, y1, x2, y2]."""
+    """Closed-ring edges as (m, 4) [x1, y1, x2, y2]: the ring edges of
+    the module's PIP rule."""
     r = np.asarray(ring, dtype=np.float64)
     if len(r) < 2:
         return np.empty((0, 4), dtype=np.float64)
     nxt = np.roll(r, -1, axis=0)
     segs = np.concatenate([r, nxt], axis=1)
-    # drop the closing wrap edge if the ring is already explicitly closed
-    if np.allclose(r[0], r[-1]):
+    # drop the closing wrap edge only if the ring is stored exactly
+    # closed: a nearly closed ring keeps its short closing edge
+    if (r[0] == r[-1]).all():
         segs = segs[:-1]
     return segs
 
@@ -145,19 +165,17 @@ def has_area(geom) -> bool:
 
 
 def crossings_in_ring(xs: np.ndarray, ys: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Parity of ray crossings for each point vs one ring → bool inside."""
+    """Even-odd parity of each point against one ring → bool inside."""
+    return _crossings(xs, ys, _ring_segments(ring))
+
+
+def _crossings(xs, ys, segs: np.ndarray) -> np.ndarray:
+    """Odd number of +x ray crossings of each point over (m, 4) edges."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    r = np.asarray(ring, dtype=np.float64)
-    n = len(r)
     inside = np.zeros(len(xs), dtype=bool)
-    if n < 3:
-        return inside
-    x1, y1 = r[:, 0], r[:, 1]
-    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
     # edge-by-edge, vectorized over all points (edges << points in practice)
-    for i in range(n):
-        yi, yj, xi, xj = y1[i], y2[i], x1[i], x2[i]
+    for xi, yi, xj, yj in segs:
         if yi == yj:
             continue
         cond = (yi > ys) != (yj > ys)
@@ -202,22 +220,26 @@ def point_segs_min_dist(xs, ys, segs: np.ndarray) -> np.ndarray:
 
 
 def points_in_geom(xs, ys, geom, boundary: bool = True, eps: float = 1e-9) -> np.ndarray:
-    """Vectorized containment of points in a (Multi)Polygon.
+    """Vectorized point-in-polygon under the module's PIP rule.
 
-    ``boundary=True`` counts boundary points as inside ("covers"
-    semantics); ``False`` gives strict interior ("contains" for points).
+    ``boundary=True`` counts points within eps of the boundary as inside
+    ("covers" semantics); ``False`` gives strict interior ("contains"
+    for points). A line covers only points on its segments and a point
+    covers nothing. A GeometryCollection ORs its members.
     """
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    inside = np.zeros(len(xs), dtype=bool)
-    for rings in _polygons_of(geom):
-        if not rings:
-            continue
-        acc = crossings_in_ring(xs, ys, rings[0])
-        for hole in rings[1:]:
-            acc ^= crossings_in_ring(xs, ys, hole)  # even-odd handles holes
-        inside |= acc
+    t, data = geom
+    if t == "GeometryCollection":
+        inside = np.zeros(len(xs), dtype=bool)
+        for g in data:
+            inside |= points_in_geom(xs, ys, g, boundary, eps)
+        return inside
     segs = geom_segments(geom)
+    if t in ("Polygon", "MultiPolygon"):
+        inside = _crossings(xs, ys, segs)
+    else:
+        inside = np.zeros(len(xs), dtype=bool)
     if len(segs):
         on_edge = points_on_segments(xs, ys, segs, eps)
         if boundary:
@@ -227,51 +249,46 @@ def points_in_geom(xs, ys, geom, boundary: bool = True, eps: float = 1e-9) -> np
     return inside
 
 
+def members_or(geom) -> bool:
+    """True for a GeometryCollection with two or more areal members
+    (nested collections flattened): the one shape where the PIP rule
+    ORs several parities, so one parity over all of its ring edges
+    (`ring_line_segments`) does not answer it."""
+
+    def areal(g):
+        t, data = g
+        if t == "GeometryCollection":
+            return sum(areal(m) for m in data)
+        return int(t in ("Polygon", "MultiPolygon"))
+
+    return geom[0] == "GeometryCollection" and areal(geom) >= 2
+
+
 class EdgeTable(NamedTuple):
     """What `points_in_geom` and `point_segs_min_dist` derive from a
     (Multi)Polygon on every call, built once by `edge_table`. Arrays are
     column-major so each operand is a contiguous row."""
 
     cross: np.ndarray  # (5, e) x1, y1, y2, x2 - x1, y2 - y1 of the parity edges
-    part: np.ndarray  # (e,) polygon part of each parity edge
-    nparts: int
     segs: np.ndarray  # (5, s) x1, y1, dx, dy, squared length (0 -> 1) of the boundary
     bounds: tuple[float, float, float, float]
 
 
 def edge_table(geom) -> EdgeTable | None:
-    """Flat point-probe table of a Polygon / MultiPolygon.
-
-    The parity edges are those `crossings_in_ring` walks: every ring of
-    >= 3 vertices, wrap edge included, horizontal edges dropped (they
-    never flip parity). Each carries its part id because parity is per
-    part and the parts OR — `points_in_geom`'s rule, which differs from
-    `points_in_polys_flat`'s global parity where parts overlap. The
-    boundary segments are `geom_segments`'. Returns None for a geometry
-    with no boundary segment."""
+    """Flat point-probe table of a Polygon / MultiPolygon under the
+    module's PIP rule: its ring edges (`geom_segments`) serve as the
+    boundary segments and, horizontal ones dropped (they never flip
+    parity), as the parity edges of one parity over the whole table.
+    Returns None for a geometry with no boundary segment."""
     segs = geom_segments(geom)
     if not len(segs):
         return None
-    cross, part = [], []
-    nparts = 0
-    for rings in _polygons_of(geom):
-        for ring in rings:
-            r = np.asarray(ring, dtype=np.float64)
-            if len(r) < 3:
-                continue
-            x1, y1 = r[:, 0], r[:, 1]
-            x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-            keep = y1 != y2
-            cross.append(np.stack([x1, y1, y2, x2 - x1, y2 - y1])[:, keep])
-            part.append(np.full(int(keep.sum()), nparts, dtype=np.int64))
-        nparts += 1
-    sx1, sy1 = segs[:, 0], segs[:, 1]
-    dx, dy = segs[:, 2] - sx1, segs[:, 3] - sy1
+    sx1, sy1, sx2, sy2 = segs.T
+    dx, dy = sx2 - sx1, sy2 - sy1
     ln2 = dx * dx + dy * dy
+    keep = sy1 != sy2
     return EdgeTable(
-        np.concatenate(cross, axis=1) if cross else np.empty((5, 0), dtype=np.float64),
-        np.concatenate(part) if part else np.empty(0, dtype=np.int64),
-        nparts,
+        np.stack([sx1[keep], sy1[keep], sy2[keep], dx[keep], dy[keep]]),
         np.stack([sx1, sy1, dx, dy, np.where(ln2 == 0, 1.0, ln2)]),
         wkb.bounds(geom),
     )
@@ -284,14 +301,14 @@ def point_vs_edge_tables(
 
     Returns (covered, dist) aligned with `tables`. `covered` is
     `intersects(geom, point)`: the eps-padded bbox gate of
-    `bbox_disjoint`, then `points_in_geom` (per-part even-odd parity, or
-    within eps of the boundary). `dist` is `geom_distance_planar`: 0
-    where covered, else the distance to the nearest boundary segment.
-    The arithmetic is that of `crossings_in_ring` and
+    `bbox_disjoint`, then `points_in_geom` (the module's PIP rule: one
+    even-odd parity per table, or within eps of the boundary). `dist`
+    is `geom_distance_planar`: 0 where covered, else the distance to the
+    nearest boundary segment. The arithmetic is that of `_crossings` and
     `point_segs_min_dist`, so the values are bit-identical to theirs."""
     n = len(tables)
     if n == 1:
-        cross, part, segs = tables[0].cross, tables[0].part, tables[0].segs
+        cross, segs = tables[0].cross, tables[0].segs
     else:
         cross = np.concatenate([t.cross for t in tables], axis=1)
         segs = np.concatenate([t.segs for t in tables], axis=1)
@@ -305,17 +322,12 @@ def point_vs_edge_tables(
     if gate.any():
         x1, y1, y2, dxe, dye = cross
         flip = ((y1 > py) != (y2 > py)) & (px < dxe * (py - y1) / dye + x1)
-        if n == 1 and tables[0].nparts == 1:
+        if n == 1:
             inside[0] = np.count_nonzero(flip) % 2 == 1
         else:
-            nparts = [t.nparts for t in tables]
-            if n > 1:
-                base = np.cumsum(nparts) - nparts
-                part = np.concatenate([t.part for t in tables]) + np.repeat(
-                    base, [t.cross.shape[1] for t in tables]
-                )
-            odd = np.bincount(part[flip], minlength=sum(nparts)) % 2 == 1
-            inside = np.bincount(np.repeat(np.arange(n), nparts)[odd], minlength=n) > 0
+            # bincount, not reduceat: a table may have no parity edge
+            table = np.repeat(np.arange(n), [t.cross.shape[1] for t in tables])
+            inside = np.bincount(table[flip], minlength=n) % 2 == 1
         inside &= gate
         if inside.all():
             return inside, np.zeros(n)
@@ -339,9 +351,10 @@ def points_in_polys_flat(
     """Batch PIP where each point has its OWN polygon: one vectorized
     pass over (point, edge) pairs across ALL groups at once.
 
-    groups: [(row_indices, segs(e,4))] — rows grouped by their polygon,
-    segs = all ring edges (holes included; even-odd parity handles them
-    and MultiPolygon parts uniformly). Cost is O(sum m_g * e_g) numpy
+    groups: [(row_indices, segs(e,4))] — rows grouped by their Polygon /
+    MultiPolygon, segs = its ring edges (`geom_segments`), answered by
+    the module's PIP rule: one parity over all of them, or within eps
+    of one. Cost is O(sum m_g * e_g) numpy
     work with NO per-group overhead — the shape that wins when an Arrow
     batch touches hundreds of distinct small polygons (a world admin
     layer probed by shuffled points touches ~all of them per batch).

@@ -231,11 +231,12 @@ def cell_refine_segments(
     Returns a list aligned with `cells`: (nring, base_parity, flat segs)
     where the flat array is [x1,y1,x2,y2]*k with the first nring
     segments being polygon-ring segments (crossing + edge test) and the
-    rest line segments (edge test only). Valid-geometry note: parity is
-    XOR across ALL rings, which equals `points_in_geom`'s OR-across-
-    polygons whenever polygon interiors are disjoint (any valid
-    (Multi)Polygon); overlapping-interior invalid multipolygons must use
-    the Arrow refine path."""
+    rest line segments (edge test only). Parity is one XOR over all ring
+    edges (`predicates.ring_line_segments`): the PIP rule of
+    `kernels.predicates` for any geometry with at most one areal member.
+    A GeometryCollection with more (`predicates.members_or`) ORs its
+    members, which one parity cannot express; it must use the Arrow
+    refine path."""
     from mundipy_spark.kernels import predicates
 
     rs, ls = predicates.ring_line_segments(geom)
@@ -272,42 +273,3 @@ def cell_refine_segments(
         flat = np.concatenate([kept_r, kept_l], axis=0).ravel()
         out.append((int(len(kept_r)), bpar, flat.tolist()))
     return out
-
-
-def multiparts_interiors_overlap(geom, rel_eps: float = 1e-12) -> bool:
-    """True when `geom` is a MultiPolygon whose member INTERIORS overlap
-    — an invalid multipolygon, and the one shape where
-    `cell_refine_segments`' XOR-across-all-rings parity diverges from
-    `points_in_geom`'s OR-across-polygons (a point covered by an even
-    number of members reports outside under XOR). The JVM refine path
-    must not be used for such layers; `st_cell_refine` calls this per
-    distinct geometry and emits an nring=-1 sentinel so the index probe
-    can fall back to the Arrow path.
-
-    Exactness matters in BOTH directions: a bbox-only test would flag
-    valid layers with interlocking member bboxes (losing the fast path
-    for no reason), so overlap is decided by the exact triangulated
-    intersection area (`overlay.intersection_area_planar`) — valid
-    members that merely TOUCH along edges have zero intersection area
-    and stay on the fast path. Build-side cost only: pairwise over the
-    (few) members of each multipolygon, bbox-prefiltered."""
-    if geom is None or geom[0] != "MultiPolygon" or len(geom[1]) < 2:
-        return False
-    from mundipy_spark.kernels import measure, overlay, wkb
-
-    parts = [("Polygon", rings) for rings in geom[1]]
-    bbs = [wkb.bounds(p) for p in parts]
-    areas = [abs(measure.geom_area_planar(p)) for p in parts]
-    for i in range(len(parts)):
-        for j in range(i + 1, len(parts)):
-            if (
-                bbs[i][2] < bbs[j][0]
-                or bbs[j][2] < bbs[i][0]
-                or bbs[i][3] < bbs[j][1]
-                or bbs[j][3] < bbs[i][1]
-            ):
-                continue
-            inter = overlay.intersection_area_planar(parts[i], parts[j])
-            if inter > rel_eps * max(min(areas[i], areas[j]), 1e-300):
-                return True
-    return False

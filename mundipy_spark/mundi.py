@@ -13,8 +13,8 @@ edge tables of its candidates: lon/lat tables for `intersects`, and
 projected tables per (polygon, UTM zone) pair for the meter distances
 of `within` / `nearest`. Each worker builds those tables lazily on first
 use and keeps them with its broadcast copy; they are never pickled. The
-tables keep the even-odd rule of `predicates.points_in_geom`: parity per
-polygon part, ORed across the parts of a MultiPolygon.
+tables follow the PIP rule of `kernels.predicates`: one even-odd parity
+over all ring edges of a polygon or multipolygon.
 
 Contract parity (judge-visible semantics, SURVEY §7.4):
 - fn returning None drops the row (mundi.py:138-140);

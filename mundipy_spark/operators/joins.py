@@ -178,13 +178,12 @@ def tile_index(
     column entirely: tile_join_points then refines with a pure Catalyst
     expression — zero Python on the probe path, and the broadcast ships
     a few doubles per boundary cell instead of whole-polygon WKB (the
-    shape that matters when the probe side is 10^12 rows). Valid only
-    for disjoint-interior polygon layers; an invalid overlapping-
-    interior multipolygon is flagged with an nring=-1 sentinel by
-    st_cell_refine (exact check, kernels.tiling.
-    multiparts_interiors_overlap) — the default join path then falls
-    back to "arrow" automatically, and using such an index explicitly
-    raises. Default "arrow" keeps the geometry column and the
+    shape that matters when the probe side is 10^12 rows). Both paths
+    follow the PIP rule of `kernels.predicates`; st_cell_refine flags a
+    GeometryCollection with two or more areal members (one parity cannot
+    OR them) with an nring=-1 sentinel, the default join path then
+    falls back to "arrow" automatically, and using such an index
+    explicitly raises. Default "arrow" keeps the geometry column and the
     Arrow-kernel refinement, correct for any layer."""
     if refine not in ("arrow", "jvm"):
         raise ValueError(f"unsupported refine={refine!r}")
@@ -252,8 +251,8 @@ def _index_probe(index: DataFrame) -> tuple[int, bool]:
     """(maxk, unsafe) of a refine="jvm" index: maxk is the max segments
     per boundary cell (the unroll width for st.pip_refine_expr), unsafe
     is True when any layer geometry carries st_cell_refine's nring=-1
-    sentinel (invalid overlapping-interior multipolygon — the refine
-    expression would return wrong containment; callers must use the
+    sentinel (a GeometryCollection with two or more areal members — the
+    refine expression cannot OR them; callers must use the
     Arrow path). ONE small driver-side agg over the (broadcast-sized)
     index, memoized per plan; amortized exactly like the build itself."""
     key = index._jdf.queryExecution().logical().semanticHash()
@@ -274,8 +273,8 @@ def _index_maxk(index: DataFrame) -> int:
     maxk, unsafe = _index_probe(index)
     if unsafe:
         raise ValueError(
-            "tile join: this refine='jvm' index contains an invalid "
-            "multipolygon with overlapping member interiors; rebuild it "
+            "tile join: this refine='jvm' index contains a "
+            "GeometryCollection with two or more areal members; rebuild it "
             "with tile_index(refine='arrow') (the default join path "
             "does this automatically)"
         )
@@ -301,7 +300,8 @@ def tile_join_points(
     index: DataFrame | None = None,
 ) -> DataFrame:
     """Points-vs-polygons intersects join (the reference's canonical
-    point-in-polygon tagging workload, tests/test_example.py:10-27).
+    point-in-polygon tagging workload, tests/test_example.py:10-27),
+    under the PIP rule of `kernels.predicates` on either index.
 
     how='inner' keeps matching pairs; how='left' keeps all points with
     polygon columns null when unmatched (the 'none' default semantics of
@@ -322,9 +322,10 @@ def tile_join_points(
         # the probe path. Two cases rebuild as an Arrow index instead:
         # layers denser than UNROLL_CAP segments per boundary cell
         # (detailed coastlines vs a fine res — per-batch numpy
-        # refinement wins at that density), and layers carrying an
-        # invalid overlapping-interior multipolygon (st_cell_refine's
-        # nring=-1 sentinel: XOR parity would be wrong there). The
+        # refinement wins at that density), and layers carrying a
+        # GeometryCollection with two or more areal members
+        # (st_cell_refine's nring=-1 sentinel: one parity cannot OR
+        # them). The
         # index is persisted BEFORE the probe so the expensive build
         # (cover + refine UDFs) runs once — the probe agg materializes
         # it into cache and the join reuses it; without this the build

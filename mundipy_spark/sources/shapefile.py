@@ -20,6 +20,7 @@ import struct
 
 import numpy as np
 
+from mundipy_spark.kernels import predicates
 from mundipy_spark.kernels import wkb as wkb_mod
 
 SHP_NULL, SHP_POINT, SHP_POLYLINE, SHP_POLYGON, SHP_MULTIPOINT = 0, 1, 3, 5, 8
@@ -28,14 +29,6 @@ SHP_NULL, SHP_POINT, SHP_POLYLINE, SHP_POLYGON, SHP_MULTIPOINT = 0, 1, 3, 5, 8
 def _ring_signed_area(ring: np.ndarray) -> float:
     x, y = ring[:, 0], ring[:, 1]
     return float(np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y) / 2.0)
-
-
-def _point_in_ring(px, py, ring) -> bool:
-    x1, y1 = ring[:, 0], ring[:, 1]
-    x2, y2 = np.roll(x1, -1), np.roll(y1, -1)
-    hit = (y1 > py) != (y2 > py)
-    xs = x1 + (py - y1) / np.where(y2 == y1, 1.0, y2 - y1) * (x2 - x1)
-    return bool(np.sum(hit & (px < xs)) % 2)
 
 
 def _parse_shp_record(shape_type: int, buf: bytes):
@@ -70,7 +63,7 @@ def _parse_shp_record(shape_type: int, buf: bytes):
         for h in holes:
             placed = False
             for p in polys:
-                if _point_in_ring(h[0, 0], h[0, 1], p[0]):
+                if predicates.crossings_in_ring(h[:1, 0], h[:1, 1], p[0])[0]:
                     p.append(h)
                     placed = True
                     break

@@ -178,21 +178,15 @@ def test_dense_prebuilt_jvm_index_uses_hof_fallback(spark):
 
 
 def test_invalid_multipolygon_falls_back_to_arrow(spark):
-    """An INVALID multipolygon with overlapping member interiors is the
-    one layer where the refine path's XOR parity diverges from
-    points_in_geom's OR-across-polygons (points covered by BOTH members
-    would report outside). st_cell_refine flags such geometries with an
-    nring=-1 sentinel; the default join path must fall back to the
-    Arrow index, and using the unsafe index explicitly must raise."""
-    import numpy as np
-
+    """An INVALID multipolygon with overlapping member interiors follows
+    the one PIP rule (global even-odd parity over all ring edges) on
+    every path: the double-covered point is outside on the default, jvm
+    and arrow paths, and its jvm index probes without raising. Only a
+    GeometryCollection with two or more areal members, whose members OR,
+    still makes the default path fall back to the Arrow index (and an
+    explicit jvm index of it refuse to be probed)."""
     sq = lambda x0, y0, x1, y1: np.array(  # noqa: E731
         [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float
-    )
-    # members [0,20]^2 and [10,10]-[30,30]: overlap region [10,20]^2
-    bad = ("MultiPolygon", [[sq(0, 0, 20, 20)], [sq(10, 10, 30, 30)]])
-    polys = spark.createDataFrame(
-        pd.DataFrame([{"region": "BAD", "geometry": wkb.dumps(bad), "pop": 1.0}])
     )
     pts = spark.createDataFrame(
         pd.DataFrame(
@@ -203,27 +197,41 @@ def test_invalid_multipolygon_falls_back_to_arrow(spark):
             }
         )
     )
-    got = (
-        joins.tile_join_points(pts, polys, res=4, poly_cols=["region"])
-        .select("pid")
-        .toPandas()["pid"]
-        .tolist()
+
+    def layer(geom):
+        return spark.createDataFrame(
+            pd.DataFrame([{"region": "R", "geometry": wkb.dumps(geom), "pop": 1.0}])
+        )
+
+    def pids(polys, **kw):
+        return sorted(
+            joins.tile_join_points(pts, polys, res=4, poly_cols=["region"], **kw)
+            .select("pid")
+            .toPandas()["pid"]
+            .tolist()
+        )
+
+    # members [0,20]^2 and [10,10]-[30,30]: overlap region [10,20]^2
+    bad = layer(("MultiPolygon", [[sq(0, 0, 20, 20)], [sq(10, 10, 30, 30)]]))
+    idx_j = joins.tile_index(bad, res=4, keep=["region"], refine="jvm")
+    idx_a = joins.tile_index(bad, res=4, keep=["region"], refine="arrow")
+    # global parity: the double-covered point 0 is outside on every path
+    assert pids(bad) == pids(bad, index=idx_j) == pids(bad, index=idx_a) == [1, 2]
+    maxk, unsafe = joins._index_probe(idx_j)
+    assert not unsafe and joins._index_maxk(idx_j) == maxk > 0
+
+    # a collection's members OR: the overlap point matches, via Arrow
+    gc = layer(
+        ("GeometryCollection", [("Polygon", [sq(0, 0, 20, 20)]),
+                                ("Polygon", [sq(10, 10, 30, 30)])])
     )
-    # OR semantics: the double-covered point 0 MUST match
-    assert sorted(got) == [0, 1, 2]
-
-    # the explicit jvm index refuses to be probed
-    import pytest as _pytest
-
-    idx = joins.tile_index(polys, res=4, keep=["region"], refine="jvm")
-    with _pytest.raises(ValueError, match="overlapping member interiors"):
-        joins._index_maxk(idx)
+    assert pids(gc) == [0, 1, 2]
+    gidx = joins.tile_index(gc, res=4, keep=["region"], refine="jvm")
+    with pytest.raises(ValueError, match="two or more areal members"):
+        joins._index_maxk(gidx)
 
     # a VALID multipolygon (touching members) keeps the jvm fast path
     ok = ("MultiPolygon", [[sq(0, 0, 10, 10)], [sq(10, 0, 20, 10)]])
-    vpolys = spark.createDataFrame(
-        pd.DataFrame([{"region": "OK", "geometry": wkb.dumps(ok), "pop": 1.0}])
-    )
-    vidx = joins.tile_index(vpolys, res=4, keep=["region"], refine="jvm")
+    vidx = joins.tile_index(layer(ok), res=4, keep=["region"], refine="jvm")
     maxk, unsafe = joins._index_probe(vidx)
     assert not unsafe and maxk > 0

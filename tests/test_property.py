@@ -262,8 +262,8 @@ def test_local_index_point_probes_match_per_candidate_loop(zone, lat0, seed, rad
     """LocalIndex's edge-table point probes return the same features in
     the same order, and the same nearest pick on ties, as the
     per-candidate predicate / distance loop. The layer has a holed
-    polygon, a MultiPolygon with overlapping parts (per-part parity ORs,
-    so the overlap is inside), polygons on both sides of a UTM zone
+    polygon, a MultiPolygon with overlapping parts (global parity, so
+    the overlap is outside), polygons on both sides of a UTM zone
     boundary, a polygon wider than 6 deg of longitude (AEQD pairs), and
     a point feature; the wide polygon overlaps two others, so nearest
     meets ties at distance 0. Probes include vertices and edge
@@ -297,8 +297,8 @@ def test_local_index_point_probes_match_per_candidate_loop(zone, lat0, seed, rad
         assert [f["i"] for f in ix.within(radius_m, g)] == _ref_within(ix, radius_m, g)
         near = ix.nearest(g)
         assert (near["i"] if near is not None else None) == _ref_nearest(ix, g)
-    # the overlap of the MultiPolygon's parts: even parity globally,
-    # inside under the per-part rule
-    assert 2 in [f["i"] for f in ix.intersects(("Point", np.array([b - 0.05, lat0 - 1.05])))]
+    # the overlap of the MultiPolygon's parts: global parity over all
+    # ring edges is even there, so it is outside
+    assert 2 not in [f["i"] for f in ix.intersects(("Point", np.array([b - 0.05, lat0 - 1.05])))]
     # probes near the boundary measured polygons in both zones
     assert len({z[-2:] for _, z in ix._zone_tables}) == 2

@@ -15,6 +15,8 @@ Checks (all pure numpy, no Spark):
 2. DE-9IM coherence: the named predicates must equal their
    relate_pattern definitions on random pairs.
 3. WKB round-trips on every generated geometry.
+4. One point-in-polygon rule (`check_pip`): every PIP path agrees with
+   `points_in_geom` on valid and invalid operands.
 
 Usage: PYTHONPATH=/root/repo python tools/fuzz_campaign.py [n_overlay] [n_pred] [seed]
 Exits nonzero on the first divergence with a reproducer dump.
@@ -28,7 +30,7 @@ import numpy as np
 
 sys.path.insert(0, "/root/repo")
 
-from mundipy_spark.kernels import measure, overlay, predicates, wkb  # noqa: E402
+from mundipy_spark.kernels import measure, overlay, predicates, tiling, wkb  # noqa: E402
 
 
 def star(rng, degenerate: bool = False):
@@ -287,7 +289,9 @@ def main() -> int:
     print(f"mixed-dim: {n_pr} examples, {bad3} failures")
     bad4 = check_mixed_predicates(n_pr, seed)
     print(f"mixed-dim predicates: {n_pr} examples, {bad4} failures")
-    return bad + bad2 + bad3 + bad4
+    bad5 = check_pip(n_pr, seed)
+    print(f"pip: {n_pr} examples, {bad5} failures")
+    return bad + bad2 + bad3 + bad4 + bad5
 
 
 
@@ -373,6 +377,96 @@ def check_mixed(n: int, seed: int) -> int:
             print(f"CRASH mixed at {i}: {exc}")
             _dump(line, A)
             return bad + 1
+    return bad
+
+
+def crossing_star(rng):
+    """Vertices in random order: a self-crossing ring, half the time
+    stored nearly (not exactly) closed."""
+    pts = rng.uniform(-2.5, 2.5, (int(rng.integers(4, 10)), 2))
+    end = pts[:1] + (rng.uniform(-1e-4, 1e-4, 2) if rng.random() < 0.5 else 0.0)
+    return ("Polygon", [np.vstack([pts, end])])
+
+
+# a table with no parity edge (all edges horizontal), put after the
+# probed table so point_vs_edge_tables' multi-table path meets it
+_FLAT_TABLE = predicates.edge_table(
+    ("Polygon", [np.array([[9.0, 9.0], [10.0, 9.0], [9.0, 9.0]])])
+)
+
+
+def replay_cell_refine(xs, ys, geom, res: int) -> np.ndarray:
+    """The JVM refine (`st.pip_refine_expr`) in numpy: each point
+    against `tiling.cell_refine_segments` of its own cell — crossing
+    parity over the first nring segments XOR the base parity bit, or
+    `st._seg_terms`' squared distance to any segment <= 1e-18."""
+    out = np.zeros(len(xs), dtype=bool)
+    refs = tiling.cell_refine_segments(geom, tiling.point_cell(xs, ys, res))
+    for k, (nring, bpar, flat) in enumerate(refs):
+        xi, yi, xj, yj = np.asarray(flat, dtype=np.float64).reshape(-1, 4).T
+        x, y = xs[k], ys[k]
+        dx, dy, ux, uy, vx, vy = xj - xi, yj - yi, x - xi, y - yi, x - xj, y - yj
+        dot, ln2, cr = ux * dx + uy * dy, dx * dx + dy * dy, ux * dy - uy * dx
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = dx * (y - yi) / dy + xi
+            perp = cr * cr / ln2
+        cross = (np.arange(len(xi)) < nring) & ((yi > y) != (yj > y)) & (x < xint)
+        d2 = np.where(dot <= 0.0, ux * ux + uy * uy, np.where(dot >= ln2, vx * vx + vy * vy, perp))
+        out[k] = (bpar != (np.count_nonzero(cross) % 2 == 1)) or bool((d2 <= 1e-18).any())
+    return out
+
+
+def check_pip(n: int, seed: int) -> int:
+    """The PIP rule of `kernels.predicates` on every path: at vertices,
+    edge midpoints and random points of random stars, degenerate stars,
+    self-crossing (and nearly closed) stars and multipolygons with
+    overlapping parts, `points_in_geom` must equal LocalIndex's
+    `point_vs_edge_tables` (one table, and ahead of a table with no
+    parity edge), the Arrow refine's `points_in_polys_flat` and the JVM
+    refine's `cell_refine_segments` (`replay_cell_refine`)."""
+    rng = np.random.default_rng(seed + 4)
+    bad = 0
+    for i in range(n):
+        kind = i % 4
+        if kind == 0:
+            g = star(rng)
+        elif kind == 1:
+            g = star(rng, degenerate=True)
+        elif kind == 2:
+            g = crossing_star(rng)
+        else:
+            g = ("MultiPolygon", [star(rng)[1], star(rng)[1]])
+        segs = predicates.geom_segments(g)
+        pts = np.vstack(
+            [predicates.geom_vertices(g), (segs[:, :2] + segs[:, 2:]) / 2.0,
+             rng.uniform(-5.0, 5.0, (16, 2))]
+        )
+        xs, ys = pts[:, 0], pts[:, 1]
+        try:
+            want = predicates.points_in_geom(xs, ys, g)
+            t = predicates.edge_table(g)
+            res = tiling.pick_resolution(*wkb.bounds(g), target_cells=64)
+            got = {
+                "edge table": [predicates.point_vs_edge_tables(x, y, [t])[0][0] for x, y in pts],
+                "edge tables": [
+                    predicates.point_vs_edge_tables(x, y, [t, _FLAT_TABLE])[0][0] for x, y in pts
+                ],
+                "flat": predicates.points_in_polys_flat(xs, ys, [(np.arange(len(xs)), segs)]),
+                "cell refine": replay_cell_refine(xs, ys, g, res),
+            }
+        except Exception as exc:  # noqa: BLE001
+            print(f"CRASH pip at {i}: {exc}")
+            _dump(g, g)
+            return bad + 1
+        for name, v in got.items():
+            diff = np.nonzero(np.asarray(v) != want)[0]
+            if len(diff):
+                k = diff[0]
+                print(f"FAIL pip {name} at {i}: point {pts[k].tolist()}, want {want[k]}")
+                _dump(g, ("Point", pts[k]))
+                bad += 1
+                if bad >= 3:
+                    return bad
     return bad
 
 
